@@ -2,8 +2,28 @@
 
 Vanilla Spark SQL cannot mutate parquet-backed views, so
 ``Engine.sql("DELETE FROM t WHERE ...")`` would fail at the analyzer.
-This shim recognizes the three DML statement shapes and routes them
-through the engine's real mutation paths:
+This module routes statements over engine tables through the engine's
+real mutation paths. It has two front ends:
+
+* **Standard DML is parsed by Spark's own parser.** A statement whose
+  first keyword is DELETE, UPDATE, MERGE or INSERT goes to
+  ``sessionState().sqlParser().parsePlan``; the returned
+  ``DeleteFromTable`` / ``UpdateTable`` / ``MergeIntoTable`` /
+  ``InsertIntoStatement`` plan is walked into engine calls. Its
+  expressions become Columns directly (``_col``); where an engine API
+  takes SQL text (deletion-vector predicates, the generated-column
+  substitution) they are rendered by Spark (``.sql()``). A
+  ``ParseException`` surfaces as a ValueError naming the broken rule.
+  Nothing else is parsed, so a SELECT never pays for it.
+* **Everything else keeps a small extension grammar** of anchored
+  regexes below: the statements Spark's parser does not know (OPTIMIZE,
+  APPLY CHANGES, VACUUM, CREATE VERSIONED TABLE, COPY INTO, REORG,
+  CONVERT, RESTORE, DESCRIBE HISTORY/DETAIL), the engine-specific forms
+  of CREATE [OR REPLACE] TABLE, ALTER TABLE, SHOW, DROP, ANALYZE,
+  TRUNCATE and DESCRIBE, and the time-travel rewrite, which runs first
+  for every statement.
+
+The standard DML statements:
 
 * ``DELETE FROM t [WHERE p]``            → row-exact rewrite of the kept
   slice (NOT key-based ``engine.delete`` — with non-unique keys a key
@@ -12,7 +32,8 @@ through the engine's real mutation paths:
   gone). Partitioned tables rewrite ONLY the partitions holding matched
   rows (``engine.replace_where``: literal-predicate partition pruning,
   emptied partitions tombstoned); unpartitioned fall back to
-  ``engine.overwrite``
+  ``engine.overwrite``; deletion-vector tables commit a sidecar
+  (``engine.delete_where_dv``)
 * ``UPDATE t SET c = e, ... [WHERE p]``  → row-exact rewrite with
   ``when(p, e).otherwise(c)`` per column, all SET expressions
   evaluated against the OLD row (standard SQL: ``SET a = b, b = a``
@@ -20,19 +41,24 @@ through the engine's real mutation paths:
   Partition-scoped like DELETE when no SET column is a layout
   (partition/bucket) column; otherwise a full overwrite (rows may
   migrate partitions)
-* ``INSERT INTO t [(cols)] SELECT ...``  → ``engine.insert`` (listed
-  columns resolve case-insensitively, unlisted ones NULL-fill, values
-  cast to the table's column types; without a list the mapping is
-  positional with strict arity)
-* ``MERGE INTO t USING src|(<select>) [AS a] ON <key equalities>
-  WHEN [NOT] MATCHED [AND c] THEN DELETE | UPDATE SET * | UPDATE SET
-  col = expr, ... | INSERT *``, plus ``WHEN NOT MATCHED BY SOURCE
-  [AND c] THEN DELETE`` → ``engine.merge`` (the ON conjunction supplies
-  the merge keys; a WHEN MATCHED AND c on an UPDATE clause gates it —
-  matched rows failing c keep old values; explicit SET assignments
-  update ONLY the listed columns — qualify references as
-  ``src_alias.col`` / ``target.col``; BY SOURCE deletes target rows
-  absent from the source)
+* ``INSERT INTO|OVERWRITE [TABLE] t [(cols)] SELECT ... | VALUES ...``
+  → ``engine.insert`` / ``engine.overwrite`` (listed columns resolve
+  case-insensitively, unlisted ones NULL-fill, values cast to the
+  table's column types; without a list the mapping is positional with
+  strict arity; OVERWRITE is one atomic full replacement)
+* ``MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a] USING src|(<select>)
+  [AS s] ON <key equalities> WHEN [NOT] MATCHED [AND c] THEN DELETE |
+  UPDATE SET * | UPDATE SET col = expr, ... | INSERT * | INSERT (cols)
+  VALUES (exprs)``, plus ``WHEN NOT MATCHED BY SOURCE [AND c] THEN
+  DELETE | UPDATE SET col = expr, ...`` → ``engine.merge`` (the ON
+  conjunction supplies the merge keys; clauses of one kind apply in
+  order, first match wins; explicit SET assignments update ONLY the
+  listed columns; references qualified by the target's or the
+  source's name or alias resolve to that side; BY SOURCE clauses act on
+  target rows absent from the source)
+
+The extension grammar:
+
 * ``CREATE [OR REPLACE] [VERSIONED] TABLE t [PARTITIONED BY (cols)]
   [CLUSTER BY (cols)] AS SELECT ...`` → ``engine.create_table_as``
   (CLUSTER BY = clustered writes: every versioned write
@@ -76,9 +102,6 @@ through the engine's real mutation paths:
   paths: layout (partition/bucket) columns refuse, upsert keys refuse
   except consistent renames, constraint/expectation/generated-referenced
   columns refuse
-* ``INSERT OVERWRITE [TABLE] t [(cols)] SELECT ...`` →
-  ``engine.overwrite`` (atomic full replacement; same column-list /
-  NULL-fill / cast rules as INSERT INTO)
 * ``SHOW TABLES`` → one row per engine table (name, format, versioned,
   partitioning, in-memory flag)
 * ``DESCRIBE [TABLE] t`` → (col_name, data_type, comment) with
@@ -114,20 +137,19 @@ import hashlib
 import os
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from polars_lake_spark.exprs import referenced_columns, substitute_columns
+from polars_lake_spark.exprs import (
+    quoted_spans,
+    referenced_columns,
+    substitute_columns,
+)
 from polars_lake_spark.layout import BUCKET_COL as _BUCKET_COL
 
-_DELETE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([A-Za-z_][\w.]*)(?:\s+WHERE\s+(.+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_UPDATE = re.compile(
-    r"^\s*UPDATE\s+([A-Za-z_][\w.]*)\s+SET\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
-)
+# the four standard DML verbs Spark's parser reads (_execute_parsed_dml);
+# nothing else pays for a parse
+_DML_VERB = re.compile(r"\s*(?:DELETE|UPDATE|MERGE|INSERT)\b", re.I)
 _CTAS = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(VERSIONED\s+)?TABLE\s+([A-Za-z_][\w.]*)"
     r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
@@ -141,29 +163,6 @@ _SHOW_PARTITIONS = re.compile(
 _DROP = re.compile(
     r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][\w.]*)\s*;?\s*$",
     re.I,
-)
-_MERGE = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-    r"INTO\s+(?P<tgt>[A-Za-z_][\w.]*)"
-    r"\s+USING\s+(?P<src>\(.*?\)|[A-Za-z_][\w.]*)"
-    r"(?:\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<on>.+?)\s+(?P<whens>WHEN\s+.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_WHEN = re.compile(
-    r"WHEN\s+(NOT\s+)?MATCHED(\s+BY\s+SOURCE|\s+BY\s+TARGET)?"
-    r"\s*(?:AND\s+(.+?))?\s*THEN\s+"
-    r"(DELETE|UPDATE\s+SET\s+\*|INSERT\s+\*"
-    # explicit assignments / VALUES lists end at the next WHEN clause
-    # (the MATCHED lookahead keeps CASE WHEN expressions inside an
-    # assignment intact)
-    r"|INSERT\s*\(.+?\)\s*VALUES\s*\(.+?\)"
-    r"(?=\s+WHEN\s+(?:NOT\s+)?MATCHED\b|\s*;?\s*$)"
-    r"|UPDATE\s+SET\s+.+?(?=\s+WHEN\s+(?:NOT\s+)?MATCHED\b|\s*;?\s*$))",
-    re.I | re.S,
-)
-_MERGE_INSERT_VALUES = re.compile(
-    r"^INSERT\s*\((.+?)\)\s*VALUES\s*\((.+)\)\s*$", re.I | re.S
 )
 _APPLY_CHANGES = re.compile(
     r"^\s*APPLY\s+CHANGES\s+INTO\s+([A-Za-z_][\w.]*)"
@@ -199,15 +198,6 @@ _COPY_INTO = re.compile(
     r"^\s*COPY\s+INTO\s+([A-Za-z_][\w.]*)\s+FROM\s+'([^']+)'"
     r"(?:\s+FILEFORMAT\s*=\s*([A-Za-z_]+))?(?:\s+(FORCE))?\s*;?\s*$",
     re.I,
-)
-_INSERT = re.compile(
-    r"^\s*INSERT\s+INTO\s+([A-Za-z_][\w.]*)\s*(\([^)]*\))?\s*(SELECT\b.+?)\s*;?\s*$",
-    re.I | re.S,
-)
-_INSERT_VALUES = re.compile(
-    r"^\s*INSERT\s+INTO\s+([A-Za-z_][\w.]*)\s*(\([^)]*\))?\s*"
-    r"VALUES\s+(.+?)\s*;?\s*$",
-    re.I | re.S,
 )
 _CREATE_TABLE = re.compile(
     r"^\s*CREATE\s+(VERSIONED\s+)?TABLE\s+([A-Za-z_][\w.]*)\s*"
@@ -279,11 +269,6 @@ _ALTER_RENAME_TABLE = re.compile(
     r"([A-Za-z_][\w.]*)\s*;?\s*$",
     re.I,
 )
-_INSERT_OVERWRITE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([A-Za-z_][\w.]*)\s*"
-    r"(\([^)]*\))?\s*(SELECT\b.+?)\s*;?\s*$",
-    re.I | re.S,
-)
 _SHOW_TABLES = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.I)
 _DESCRIBE_HISTORY = re.compile(
     r"^\s*DESC(?:RIBE)?\s+HISTORY\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
@@ -305,67 +290,6 @@ _TIMETRAVEL = re.compile(
     r"(\d+|'[^']*')",
     re.I,
 )
-
-
-def _scan_top_level(s: str):
-    """Yield (index, char) for every character, tagging only TOP-LEVEL
-    positions (outside quotes/parens/brackets).  ONE scanner for both
-    splitters so quote semantics can't drift between them; handles
-    backslash-escaped quotes (Spark SQL's default string escape)."""
-    depth, q, i, n = 0, None, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if q:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            yield i, ch
-        i += 1
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas outside parens/brackets/quotes (SET-clause lists
-    whose expressions contain function calls)."""
-    cuts = [i for i, ch in _scan_top_level(s) if ch == ","]
-    parts, prev = [], 0
-    for c in cuts:
-        parts.append(s[prev:c])
-        prev = c + 1
-    parts.append(s[prev:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _split_where(s: str) -> tuple[str, str | None]:
-    """Split "set-clauses [WHERE pred]" at the first TOP-LEVEL WHERE
-    keyword — a string literal containing 'where' can't truncate the
-    clause.  The keyword test slices ``s`` directly (no whole-string
-    lower(), whose length can drift from the original for exotic
-    casefolds). A trailing bare WHERE is an error, not an
-    update-everything."""
-    for i, ch in _scan_top_level(s):
-        if (
-            ch in "wW"
-            and s[i : i + 5].lower() == "where"
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (
-                i + 5 >= len(s)
-                or not (s[i + 5].isalnum() or s[i + 5] == "_")
-            )
-        ):
-            where = s[i + 5 :].strip()
-            if not where:
-                raise ValueError("empty WHERE clause in UPDATE statement")
-            return s[:i].strip(), where
-    return s.strip(), None
 
 
 def _resolve(engine, name: str) -> str | None:
@@ -402,28 +326,6 @@ def _version_at_timestamp(engine, name: str, ts: str) -> int:
     return max(eligible)
 
 
-def _quoted_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) index ranges of string literals in ``s`` (same quote
-    semantics as _scan_top_level: both quote kinds, backslash escapes;
-    an unterminated literal runs to end-of-string)."""
-    spans, q, start, i, n = [], None, 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if q:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == q:
-                spans.append((start, i))
-                q = None
-        elif ch in "'\"":
-            q, start = ch, i
-        i += 1
-    if q:
-        spans.append((start, n))
-    return spans
-
-
 def _rewrite_time_travel(engine, query: str) -> tuple[str, dict]:
     """Rewrite every ``t [FOR] VERSION|TIMESTAMP AS OF x`` reference to a
     versioned engine table into a version-pinned temp view, so the AS OF
@@ -436,9 +338,12 @@ def _rewrite_time_travel(engine, query: str) -> tuple[str, dict]:
     zone-map SELECT fast-path can prune against the PINNED version's
     sidecars (empty dict = nothing rewritten)."""
     views: dict[str, tuple[str, int]] = {}
-    spans = _quoted_spans(query)
+    spans = None  # scanned only once a reference matches
 
     def repl(m):
+        nonlocal spans
+        if spans is None:
+            spans = quoted_spans(query)
         if any(a <= m.start() <= b for a, b in spans):
             return m.group(0)
         name = _resolve(engine, m.group(1))
@@ -454,29 +359,6 @@ def _rewrite_time_travel(engine, query: str) -> tuple[str, dict]:
         return view
 
     return _TIMETRAVEL.sub(repl, query), views
-
-
-_PRED_KEYWORDS = frozenset(
-    "and or not in is null true false between like".split()
-)
-
-
-def _partition_only_predicate(pred: str, parts: list[str]) -> bool:
-    """True when every identifier in ``pred`` is a partition column (or
-    a boolean-predicate keyword) — i.e. the delete is partition-aligned
-    and a partition tombstone beats a deletion-vector sidecar. String
-    literals are masked first; any unrecognized identifier (an ordinary
-    column, a function call) conservatively returns False, keeping the
-    row-level path."""
-    if not parts:
-        return False
-    masked = list(pred)
-    for a, b in _quoted_spans(pred):
-        for i in range(a, min(b + 1, len(pred))):
-            masked[i] = " "
-    idents = re.findall(r"[A-Za-z_]\w*", "".join(masked))
-    allowed = _PRED_KEYWORDS | {p.lower() for p in parts}
-    return all(i.lower() in allowed for i in idents)
 
 
 def _plan_deterministic(df: DataFrame) -> bool:
@@ -581,9 +463,11 @@ def _guard_layout_columns(
 
 
 def _insert_frame(
-    engine, name: str, stmt: str, col_list: str | None, select_sql: str
+    engine, name: str, stmt: str, cols: list[str], df: DataFrame
 ) -> DataFrame:
-    """Resolve an INSERT source SELECT against the target table's schema
+    """Resolve an INSERT source (a SELECT or VALUES frame, with the
+    statement's column list — empty when none was given) against the
+    target table's schema
     (shared by INSERT INTO and INSERT OVERWRITE): listed columns resolve
     case-insensitively with unknowns rejected, unlisted columns NULL-fill
     (a narrower append must not clobber the recorded schema), positional
@@ -592,15 +476,13 @@ def _insert_frame(
     later scans of the mixed directory reject), and the result is
     materialized ONCE so the reported count and the write agree even for
     a non-deterministic SELECT."""
-    df = engine.spark.sql(select_sql)
     tschema = engine.table(name).schema
     canon = {f.name.lower(): f.name for f in tschema.fields}
     # IDENTITY columns are GENERATED ALWAYS: listing one is refused,
     # omitting one leaves it ABSENT (not NULL-filled) so engine.insert
     # assigns the next range
     ident = set(engine.specs[name].identity or {})
-    if col_list:
-        cols = [c.strip() for c in col_list.strip("()").split(",")]
+    if cols:
         unknown = [c for c in cols if c.lower() not in canon]
         if unknown:
             raise ValueError(f"{stmt} {name}: no columns {unknown}")
@@ -665,6 +547,499 @@ def _insert_frame(
     return df.localCheckpoint(eager=True)
 
 
+def _seq(s) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _opt(o):
+    """A Scala ``Option``'s value, or None."""
+    return o.get() if o.isDefined() else None
+
+
+def _name_parts(node) -> tuple[str, ...]:
+    """Name parts of an ``UnresolvedAttribute`` or ``UnresolvedRelation``."""
+    if node.nodeName() == "UnresolvedAttribute":
+        return tuple(_seq(node.nameParts()))
+    return tuple(_seq(node.multipartIdentifier()))
+
+
+def _col(engine, expr) -> Column:
+    """A parsed expression as a Column — no re-render, so every shape
+    Spark parses (lambdas included) evaluates exactly as parsed."""
+    jvm = engine.spark._jvm
+    return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr))
+
+
+def _frame(engine, plan) -> DataFrame:
+    """A parsed query (MERGE source, INSERT SELECT or VALUES) as a
+    DataFrame on the engine's session."""
+    jvm = engine.spark._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        engine.spark._jsparkSession, plan
+    )
+    return DataFrame(jdf, engine.spark)
+
+
+def _conjuncts(expr) -> list:
+    if expr.nodeName() == "And":
+        return [c for k in _seq(expr.children()) for c in _conjuncts(k)]
+    return [expr]
+
+
+def _pred_sql(expr) -> str:
+    """A predicate as Spark renders it (``.sql()``), top-level conjuncts
+    AND-joined so zone-map pruning (``zonemaps.parse_conjuncts``) reads
+    each one on its own."""
+    return " AND ".join(c.sql() for c in _conjuncts(expr))
+
+
+def _partition_only_predicate(expr, parts: list[str]) -> bool:
+    """True when every column ``expr`` references is a partition column
+    and it calls no function but BETWEEN — i.e. the delete is
+    partition-aligned and a partition tombstone beats a deletion-vector
+    sidecar. Anything else (an ordinary column, a function call, a
+    subquery) conservatively returns False, keeping the row-level
+    path."""
+    allowed = {p.lower() for p in parts}
+
+    def ok(node) -> bool:
+        kind = node.nodeName()
+        if kind == "UnresolvedAttribute":
+            return _name_parts(node)[-1].lower() in allowed
+        if kind == "UnresolvedFunction":
+            if _seq(node.nameParts())[-1].lower() != "between":
+                return False
+        elif "Subquery" in kind or kind in ("Exists", "ListQuery"):
+            return False
+        return all(ok(k) for k in _seq(node.children()))
+
+    return bool(parts) and ok(expr)
+
+
+def _unalias(node) -> tuple[str | None, object]:
+    """(alias, aliased plan) of a DML target or source; no alias → None."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.alias(), node.child()
+    return None, node
+
+
+def _relation_name(node) -> str | None:
+    """The table name a plan references, or None for a query."""
+    if node.nodeName() != "UnresolvedRelation":
+        return None
+    return ".".join(_name_parts(node))
+
+
+_MERGE_GRAMMAR = (
+    "supported actions are WHEN MATCHED [AND c] THEN DELETE | UPDATE SET "
+    "* | UPDATE SET col = expr, ...; WHEN NOT MATCHED [AND c] THEN "
+    "INSERT * | INSERT (cols) VALUES (exprs); WHEN NOT MATCHED BY SOURCE "
+    "[AND c] THEN DELETE | UPDATE SET col = expr, ... (no SET * there — "
+    "there is no source row)"
+)
+
+
+def _parse_dml(engine, query: str):
+    """Spark's own parse of a DML statement. A ParseException surfaces
+    as a ValueError naming the rule the statement broke."""
+    from pyspark.errors import ParseException
+
+    try:
+        return (
+            engine.spark._jsparkSession.sessionState()
+            .sqlParser()
+            .parsePlan(query)
+        )
+    except ParseException as e:
+        verb = query.split(None, 1)[0].upper()
+        cond = e.getCondition() or ""
+        if cond == "_LEGACY_ERROR_TEMP_0006":
+            why = "INSERT column list and VALUES list differ in length"
+        elif cond.startswith("NON_LAST_"):
+            why = (
+                "when multiple clauses of one WHEN kind are given, only "
+                "the last may omit its AND condition"
+            )
+        elif verb == "MERGE":
+            why = _MERGE_GRAMMAR
+        else:
+            why = "not a statement Spark SQL parses"
+        msg = str(e).strip().splitlines()[0]
+        raise ValueError(f"{verb}: {why} ({msg})") from None
+
+
+def _execute_parsed_dml(engine, query: str) -> DataFrame | None:
+    """DELETE / UPDATE / MERGE INTO / INSERT over an engine table, parsed
+    by Spark's parser; None when the target is not an engine table (or
+    the statement is a DML form the engine does not own)."""
+    plan = _parse_dml(engine, query)
+    kind = plan.nodeName()
+    if kind == "MergeIntoTable":
+        alias, target = _unalias(plan.targetTable())
+    elif kind in ("DeleteFromTable", "UpdateTable", "InsertIntoStatement"):
+        alias, target = _unalias(plan.table())
+        if alias is not None:
+            return None
+        if kind == "InsertIntoStatement" and (
+            plan.byName() or not plan.partitionSpec().isEmpty()
+        ):
+            return None
+    else:
+        return None
+    raw = _relation_name(target)
+    name = _resolve(engine, raw) if raw else None
+    if name is None:
+        return None
+    if kind == "DeleteFromTable":
+        cond = plan.condition()
+        if cond.nodeName() == "Literal" and cond.sql() == "true":
+            cond = None  # no WHERE: every row
+        return _delete(engine, name, cond)
+    if kind == "UpdateTable":
+        return _update(
+            engine, name, _seq(plan.assignments()), _opt(plan.condition())
+        )
+    if kind == "MergeIntoTable":
+        return _merge(engine, name, plan, (name, raw, alias))
+    overwrite = bool(plan.overwrite())
+    df = _insert_frame(
+        engine,
+        name,
+        "INSERT OVERWRITE" if overwrite else "INSERT INTO",
+        _seq(plan.userSpecifiedCols()),
+        _frame(engine, plan.query()),
+    )
+    n = df.count()
+    if overwrite:
+        # Atomic full replacement (engine.overwrite): versioned tables
+        # publish one 'rewrite' snapshot; plain tables stage via
+        # localCheckpoint so a self-referential SELECT reads the OLD
+        # state. Same column-list/NULL-fill/cast semantics as INSERT.
+        engine.overwrite(name, df)
+        return _status(engine, "insert_overwrite", name, n)
+    engine.insert(name, df)
+    return _status(engine, "insert", name, n)
+
+
+def _delete(engine, name: str, cond) -> DataFrame:
+    """DELETE FROM t [WHERE cond]; ``cond`` None deletes every row."""
+    if engine.specs[name].deletion_vectors:
+        # Only genuinely ROW-level predicates pay the sidecar: a
+        # DELETE with no predicate — or one touching only partition
+        # columns — would materialize a (file,row_index) ref for
+        # EVERY doomed row and make every later read anti-join the
+        # full row set (ADVICE r8). Whole-table deletes take one
+        # empty 'rewrite' commit (which also clears live DVs);
+        # partition-only predicates fall through to the tombstone
+        # path below (its commit carries live DVs forward — refs in
+        # UNtouched partitions must survive).
+        if cond is None:
+            with engine._lock(name):
+                t = engine.table(name)
+                # live count from footers minus live DV refs — no
+                # full scan under the lock (VERDICT r9); TRUNCATE
+                # uses the same metadata path
+                n = engine.meta_row_count(name)
+                if n is None:
+                    n = t.count()
+                if n:
+                    engine.overwrite(name, t.limit(0), allow_drop=False)
+            return _status(engine, "delete", name, n)
+        if not _partition_only_predicate(
+            cond, engine.specs[name].physical_partitioning
+        ):
+            # merge-on-read: commit an O(deleted-rows) sidecar
+            # instead of rewriting touched partitions (lock inside)
+            n = engine.delete_where_dv(name, _pred_sql(cond))
+            return _status(engine, "delete", name, n)
+    # Whole statement inside the table lock: the count and the
+    # rewrite must see the same table state vs concurrent writers
+    # (TOCTOU — ADVICE r5); the lock is reentrant for overwrite().
+    with engine._lock(name):
+        t = engine.table(name)
+        # WHERE p deletes rows where p is TRUE; NULL predicate keeps.
+        pred = (
+            F.coalesce(_col(engine, cond), F.lit(False))
+            if cond is not None
+            else F.lit(True)
+        )
+        doomed, kept = t.filter(pred), t.filter(~pred)
+        if not _plan_deterministic(t.select(pred)):
+            # Pin a nondeterministic predicate (e.g. rand()) once, so
+            # n_affected and the rewrite agree (INSERT/MERGE's rule).
+            marked = t.withColumn("__pl_pred", pred).localCheckpoint(
+                eager=True
+            )
+            doomed = marked.filter(F.col("__pl_pred")).drop("__pl_pred")
+            kept = marked.filter(~F.col("__pl_pred")).drop("__pl_pred")
+        parts = engine.specs[name].physical_partitioning
+        if parts:
+            # Partition-scoped delete: ONE aggregation gives both the
+            # matched-row count and the touched partitions, then
+            # replace_where rewrites only those (emptied ones are
+            # tombstoned) — never a full-table rewrite.
+            grp = doomed.groupBy(*parts).agg(
+                F.count(F.lit(1)).alias("__pl_n")
+            ).collect()
+            n = sum(r["__pl_n"] for r in grp)
+            if n:
+                engine.replace_where(
+                    name,
+                    kept,
+                    touched=[{c: r[c] for c in parts} for r in grp],
+                )
+        else:
+            n = doomed.count()
+            if n:
+                engine.overwrite(name, kept, allow_drop=False)
+    return _status(engine, "delete", name, n)
+
+
+def _update(engine, name: str, assignments: list, cond) -> DataFrame:
+    """UPDATE t SET col = expr, ... [WHERE cond]."""
+    with engine._lock(name):
+        t = engine.table(name)
+        sets = {}  # column -> parsed SET expression
+        for a in assignments:
+            key = _name_parts(a.key())
+            if len(key) != 1:
+                raise ValueError(
+                    f"UPDATE {name}: cannot SET {a.key().sql()!r}; name "
+                    "a column of the table"
+                )
+            if key[0] not in t.columns:
+                raise ValueError(f"UPDATE {name}: no column {key[0]!r}")
+            sets[key[0]] = a.value()
+        exprs = {c: _col(engine, e) for c, e in sets.items()}
+        spec = engine.specs[name]
+        # Delta's generated-column rule for UPDATE: when a SET
+        # touches a source column of a generated column (and the
+        # generated column itself is not explicitly SET), the
+        # generated column recomputes from its formula — otherwise
+        # the auto `col <=> (expr)` CHECK would fail a legitimate
+        # statement the user cannot express better.
+        # SQL identifiers are case-insensitive: match and substitute
+        # ignoring case, in ONE pass (sequential passes would rewrite
+        # column references inside an earlier SET's already-
+        # substituted expression), and QUOTE-AWARE: a SET column
+        # whose name happens to appear inside a formula's string
+        # literal (SET mm with date_format(d, 'yyyy-MM')) must
+        # neither trigger a recompute nor corrupt the literal
+        # (ADVICE r13 #2) — exprs.py skips quoted spans and
+        # function-call identifiers.
+        set_lower = {c.lower() for c in sets}
+        subs = None
+        for gcol, gexpr in (spec.generated or {}).items():
+            if gcol.lower() in set_lower:
+                continue
+            if sets and referenced_columns(gexpr, candidates=set(sets)):
+                # every SET expression sees PRE-update values (SQL
+                # semantics), so the formula must be evaluated over
+                # the NEW source values: substitute each SET column
+                # reference in the (trusted, table-declared) formula
+                # with its parenthesized SET expression
+                if subs is None:
+                    subs = {c.lower(): e.sql() for c, e in sets.items()}
+                exprs[gcol] = F.expr(substitute_columns(gexpr, subs))
+        parts = spec.physical_partitioning
+        if spec.bucket_by and _BUCKET_COL in exprs:
+            # the derived bucket column is recomputed from its source
+            # columns on every write — a direct SET would be silently
+            # ignored (full-overwrite path) or, worse, desync the
+            # scoped path's touched-partition math (r7 review finding)
+            raise ValueError(
+                f"UPDATE {name}: {_BUCKET_COL!r} is derived from "
+                f"{spec.bucket_by}; SET its source columns instead"
+            )
+        layout_cols = (
+            set(spec.partition_by) | set(spec.bucket_by) | {_BUCKET_COL}
+        )
+        if spec.deletion_vectors and not (set(exprs) & layout_cols):
+            # merge-on-read UPDATE: DV the matched rows + append the
+            # updated ones in one atomic commit — O(matched rows),
+            # no partition rewrite. Layout-column SETs fall through
+            # to the rewrite path (rows migrate partitions).
+            n = engine.update_where_dv(
+                name, _pred_sql(cond) if cond is not None else "true", exprs
+            )
+            return _status(engine, "update", name, n)
+        pred = (
+            F.coalesce(_col(engine, cond), F.lit(False))
+            if cond is not None
+            else F.lit(True)
+        )
+        base, pred_col = t, pred
+        if not _plan_deterministic(t.select(pred)):
+            # Pin a nondeterministic predicate once: every SET
+            # column's when() and the n_affected count must share ONE
+            # evaluation, or updates tear across columns (ADVICE r5).
+            base = t.withColumn("__pl_pred", pred).localCheckpoint(
+                eager=True
+            )
+            pred_col = F.col("__pl_pred")
+        assigns = {
+            c: F.when(pred_col, e).otherwise(F.col(c))
+            for c, e in exprs.items()
+        }
+        # ONE select: every SET expression sees the OLD row (SQL
+        # semantics — sequential withColumn would leak earlier updates).
+        updated = base.select(
+            *[assigns.get(c, F.col(c)).alias(c) for c in t.columns]
+        )
+        if parts and not (set(assigns) & layout_cols):
+            # Partition-scoped update: SET doesn't touch any layout
+            # column, so no row migrates partitions — rewrite only
+            # the partitions holding matched rows (one aggregation
+            # for count + touched, same as DELETE). A SET on a
+            # partition/bucket column falls through to the full
+            # overwrite below (rows may move between partitions).
+            grp = base.filter(pred_col).groupBy(*parts).agg(
+                F.count(F.lit(1)).alias("__pl_n")
+            ).collect()
+            n = sum(r["__pl_n"] for r in grp)
+            if n:
+                engine.replace_where(
+                    name,
+                    updated,
+                    touched=[{c: r[c] for c in parts} for r in grp],
+                )
+        else:
+            n = base.filter(pred_col).count()
+            if n:
+                engine.overwrite(name, updated, allow_drop=False)
+    return _status(engine, "update", name, n)
+
+
+def _merge(engine, name: str, plan, target_names) -> DataFrame:
+    """MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a] USING src ON keys
+    WHEN ... → ``engine.merge``. ``target_names`` are the spellings that
+    qualify a target column: the engine name, the statement's name, its
+    alias."""
+    jvm = engine.spark._jvm
+    to_seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq
+    attribute = jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    src_alias, src_plan = _unalias(plan.sourceTable())
+    src_raw = _relation_name(src_plan)
+    # merge_into evaluates conditions/assignments over the joined row
+    # with internal aliases o (target) / n (source): requalify the
+    # user's own alias / table names so the statement's natural
+    # spelling (s.v < 0, tgt.v > 9) resolves. Later entries win.
+    quals = {}
+    for user, internal in (
+        *((t, "o") for t in target_names), (src_raw, "n"), (src_alias, "n")
+    ):
+        if user:
+            quals[tuple(p.lower() for p in user.split("."))] = internal
+
+    def side(qualifier) -> str | None:
+        return quals.get(tuple(p.lower() for p in qualifier))
+
+    def requalify(expr):
+        if expr.nodeName() == "UnresolvedAttribute":
+            parts = _name_parts(expr)
+            for k in range(len(parts) - 1, 0, -1):
+                if q := side(parts[:k]):
+                    return attribute(to_seq([q, *parts[k:]]))
+            return expr
+        kids = _seq(expr.children())
+        new = [requalify(k) for k in kids]
+        if all(a is b for a, b in zip(new, kids)):
+            return expr
+        return expr.withNewChildren(to_seq(new))
+
+    def col(expr):
+        return None if expr is None else _col(engine, requalify(expr))
+
+    def assignments(action) -> dict:
+        out = {}
+        for a in _seq(action.assignments()):
+            key = _name_parts(a.key())
+            if len(key) > 1 and side(key[:-1]) == "o":
+                key = key[-1:]
+            if len(key) != 1:
+                raise ValueError(
+                    f"MERGE INTO {name}: cannot assign {a.key().sql()!r}; "
+                    "name a column of the target"
+                )
+            out[key[0]] = col(a.value())
+        return out
+
+    # the supported subset maps 1:1 onto engine.merge's semantics: ON
+    # must be a conjunction of bare column equalities (they become the
+    # merge keys)
+    keys = []
+    for c in _conjuncts(plan.mergeCondition()):
+        sides = [
+            _name_parts(k)[-1]
+            for k in _seq(c.children())
+            if k.nodeName() == "UnresolvedAttribute"
+        ]
+        if c.nodeName() != "EqualTo" or len(sides) != 2 or sides[0] != sides[1]:
+            raise ValueError(
+                f"MERGE INTO {name}: ON supports only conjunctions of "
+                f"same-name column equalities (got {c.sql()!r})"
+            )
+        keys.append(sides[0])
+    # three ORDERED clause families, each first-match-wins (Delta); the
+    # parser already refuses an unconditioned clause before the last of
+    # its family and SET * on a BY SOURCE clause
+    matched_clauses, not_matched_clauses, by_source_clauses = [], [], []
+    for family, actions in (
+        (matched_clauses, plan.matchedActions()),
+        (by_source_clauses, plan.notMatchedBySourceActions()),
+    ):
+        for a in _seq(actions):
+            kind = a.nodeName()
+            family.append(
+                {
+                    "action": "delete" if kind == "DeleteAction" else "update",
+                    "condition": col(_opt(a.condition())),
+                    "set": assignments(a) if kind == "UpdateAction" else None,
+                }
+            )
+    for a in _seq(plan.notMatchedActions()):
+        not_matched_clauses.append(
+            {
+                "condition": col(_opt(a.condition())),
+                "values": (
+                    assignments(a) if a.nodeName() == "InsertAction" else None
+                ),
+            }
+        )
+    if src_raw is not None:
+        rsrc = _resolve(engine, src_raw)
+        # engine tables are registered under their VIEW key
+        # (schema__table) — resolve like every other reference here
+        src = engine.table(rsrc) if rsrc else engine.spark.table(src_raw)
+    else:
+        src = _frame(engine, src_plan)
+    # n_affected and the merge join must see the same rows: pin ONLY
+    # a non-deterministic source (same probe as the engine API,
+    # engine._pin_if_nondeterministic). An unconditional eager
+    # checkpoint here would materialize `MERGE INTO t USING (SELECT
+    # ... FROM 100TB_table)` into executor storage (VERDICT r13
+    # perf-weak); a deterministic plan re-evaluates identically for
+    # the count and the join.
+    src = engine._pin_if_nondeterministic(src)
+    n = src.count()
+    engine.merge(
+        name,
+        src,
+        keys,
+        matched_clauses=matched_clauses,
+        not_matched_clauses=not_matched_clauses,
+        by_source_clauses=by_source_clauses,
+        evolve_schema=bool(plan.withSchemaEvolution()),
+        # SQL / Delta UPDATE SET * is last-write-wins: a NULL in the
+        # source DOES overwrite the target (the engine API's default
+        # coalesce merge is the reference's upsert semantics, not
+        # SQL's)
+        null_clobbers=True,
+    )
+    return _status(engine, "merge", name, n)
+
+
 def try_execute_dml(engine, query: str) -> DataFrame | None:
     """Execute ``query`` if it is a DML statement over a known engine
     table; return the status frame, or None for everything else."""
@@ -672,244 +1047,10 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
     # SELECTs and inside DML source subqueries.
     query, tt = _rewrite_time_travel(engine, query)
 
-    m = _DELETE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        if engine.specs[name].deletion_vectors:
-            # Only genuinely ROW-level predicates pay the sidecar: a
-            # DELETE with no predicate — or one touching only partition
-            # columns — would materialize a (file,row_index) ref for
-            # EVERY doomed row and make every later read anti-join the
-            # full row set (ADVICE r8). Whole-table deletes take one
-            # empty 'rewrite' commit (which also clears live DVs);
-            # partition-only predicates fall through to the tombstone
-            # path below (its commit carries live DVs forward — refs in
-            # UNtouched partitions must survive).
-            if not m.group(2):
-                with engine._lock(name):
-                    t = engine.table(name)
-                    # live count from footers minus live DV refs — no
-                    # full scan under the lock (VERDICT r9); TRUNCATE
-                    # uses the same metadata path below
-                    n = engine.meta_row_count(name)
-                    if n is None:
-                        n = t.count()
-                    if n:
-                        engine.overwrite(name, t.limit(0), allow_drop=False)
-                return _status(engine, "delete", name, n)
-            if not _partition_only_predicate(
-                m.group(2), engine.specs[name].physical_partitioning
-            ):
-                # merge-on-read: commit an O(deleted-rows) sidecar
-                # instead of rewriting touched partitions (lock inside)
-                n = engine.delete_where_dv(name, m.group(2))
-                return _status(engine, "delete", name, n)
-        # Whole statement inside the table lock: the count and the
-        # rewrite must see the same table state vs concurrent writers
-        # (TOCTOU — ADVICE r5); the lock is reentrant for overwrite().
-        with engine._lock(name):
-            t = engine.table(name)
-            # WHERE p deletes rows where p is TRUE; NULL predicate keeps.
-            pred = (
-                F.coalesce(F.expr(m.group(2)), F.lit(False))
-                if m.group(2)
-                else F.lit(True)
-            )
-            doomed, kept = t.filter(pred), t.filter(~pred)
-            if not _plan_deterministic(t.select(pred)):
-                # Pin a nondeterministic predicate (e.g. rand()) once, so
-                # n_affected and the rewrite agree (INSERT/MERGE's rule).
-                marked = t.withColumn("__pl_pred", pred).localCheckpoint(
-                    eager=True
-                )
-                doomed = marked.filter(F.col("__pl_pred")).drop("__pl_pred")
-                kept = marked.filter(~F.col("__pl_pred")).drop("__pl_pred")
-            parts = engine.specs[name].physical_partitioning
-            if parts:
-                # Partition-scoped delete: ONE aggregation gives both the
-                # matched-row count and the touched partitions, then
-                # replace_where rewrites only those (emptied ones are
-                # tombstoned) — never a full-table rewrite.
-                grp = doomed.groupBy(*parts).agg(
-                    F.count(F.lit(1)).alias("__pl_n")
-                ).collect()
-                n = sum(r["__pl_n"] for r in grp)
-                if n:
-                    engine.replace_where(
-                        name,
-                        kept,
-                        touched=[{c: r[c] for c in parts} for r in grp],
-                    )
-            else:
-                n = doomed.count()
-                if n:
-                    engine.overwrite(name, kept, allow_drop=False)
-        return _status(engine, "delete", name, n)
-
-    m = _UPDATE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        with engine._lock(name):
-            t = engine.table(name)
-            set_sql, where_sql = _split_where(m.group(2))
-            pairs = []
-            for clause in _split_top_level(set_sql):
-                col, eq, expr = clause.partition("=")
-                col = col.strip()
-                if not eq or not re.fullmatch(r"[A-Za-z_]\w*", col):
-                    raise ValueError(f"cannot parse SET clause: {clause!r}")
-                if col not in t.columns:
-                    raise ValueError(f"UPDATE {name}: no column {col!r}")
-                pairs.append((col, expr.strip()))
-            spec = engine.specs[name]
-            # Delta's generated-column rule for UPDATE: when a SET
-            # touches a source column of a generated column (and the
-            # generated column itself is not explicitly SET), the
-            # generated column recomputes from its formula — otherwise
-            # the auto `col <=> (expr)` CHECK would fail a legitimate
-            # statement the user cannot express better
-            set_pairs0 = list(pairs)
-            # SQL identifiers are case-insensitive: match and substitute
-            # ignoring case, in ONE pass (sequential passes would rewrite
-            # column references inside an earlier SET's already-
-            # substituted expression), and QUOTE-AWARE: a SET column
-            # whose name happens to appear inside a formula's string
-            # literal (SET mm with date_format(d, 'yyyy-MM')) must
-            # neither trigger a recompute nor corrupt the literal
-            # (ADVICE r13 #2) — exprs.py skips quoted spans and
-            # function-call identifiers.
-            subs = {c.lower(): e for c, e in set_pairs0}
-            set_cols0 = {c for c, _ in set_pairs0}
-            for gcol, gexpr in (spec.generated or {}).items():
-                if gcol.lower() in {c.lower() for c in set_cols0}:
-                    continue
-                if subs and referenced_columns(gexpr, candidates=set_cols0):
-                    # every SET expression sees PRE-update values (SQL
-                    # semantics), so the formula must be evaluated over
-                    # the NEW source values: substitute each SET column
-                    # reference in the (trusted, table-declared) formula
-                    # with its parenthesized SET expression
-                    pairs.append((gcol, substitute_columns(gexpr, subs)))
-            parts = spec.physical_partitioning
-            set_cols = {c for c, _ in pairs}
-            if spec.bucket_by and _BUCKET_COL in set_cols:
-                # the derived bucket column is recomputed from its source
-                # columns on every write — a direct SET would be silently
-                # ignored (full-overwrite path) or, worse, desync the
-                # scoped path's touched-partition math (r7 review finding)
-                raise ValueError(
-                    f"UPDATE {name}: {_BUCKET_COL!r} is derived from "
-                    f"{spec.bucket_by}; SET its source columns instead"
-                )
-            layout_cols = (
-                set(spec.partition_by) | set(spec.bucket_by) | {_BUCKET_COL}
-            )
-            if spec.deletion_vectors and not (set_cols & layout_cols):
-                # merge-on-read UPDATE: DV the matched rows + append the
-                # updated ones in one atomic commit — O(matched rows),
-                # no partition rewrite. Layout-column SETs fall through
-                # to the rewrite path (rows migrate partitions).
-                n = engine.update_where_dv(
-                    name,
-                    where_sql or "true",
-                    {c: F.expr(e) for c, e in pairs},
-                )
-                return _status(engine, "update", name, n)
-            pred = (
-                F.coalesce(F.expr(where_sql), F.lit(False))
-                if where_sql
-                else F.lit(True)
-            )
-            base, pred_col = t, pred
-            if not _plan_deterministic(t.select(pred)):
-                # Pin a nondeterministic predicate once: every SET
-                # column's when() and the n_affected count must share ONE
-                # evaluation, or updates tear across columns (ADVICE r5).
-                base = t.withColumn("__pl_pred", pred).localCheckpoint(
-                    eager=True
-                )
-                pred_col = F.col("__pl_pred")
-            assigns = {
-                col: F.when(pred_col, F.expr(expr)).otherwise(F.col(col))
-                for col, expr in pairs
-            }
-            # ONE select: every SET expression sees the OLD row (SQL
-            # semantics — sequential withColumn would leak earlier updates).
-            updated = base.select(
-                *[assigns.get(c, F.col(c)).alias(c) for c in t.columns]
-            )
-            if parts and not (set(assigns) & layout_cols):
-                # Partition-scoped update: SET doesn't touch any layout
-                # column, so no row migrates partitions — rewrite only
-                # the partitions holding matched rows (one aggregation
-                # for count + touched, same as DELETE). A SET on a
-                # partition/bucket column falls through to the full
-                # overwrite below (rows may move between partitions).
-                grp = base.filter(pred_col).groupBy(*parts).agg(
-                    F.count(F.lit(1)).alias("__pl_n")
-                ).collect()
-                n = sum(r["__pl_n"] for r in grp)
-                if n:
-                    engine.replace_where(
-                        name,
-                        updated,
-                        touched=[{c: r[c] for c in parts} for r in grp],
-                    )
-            else:
-                n = base.filter(pred_col).count()
-                if n:
-                    engine.overwrite(name, updated, allow_drop=False)
-        return _status(engine, "update", name, n)
-
-    m = _INSERT.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        df = _insert_frame(engine, name, "INSERT INTO", m.group(2), m.group(3))
-        n = df.count()
-        engine.insert(name, df)
-        return _status(engine, "insert", name, n)
-
-    m = _INSERT_VALUES.match(query)
-    if m:
-        # INSERT INTO t [(cols)] VALUES (...), (...) — the first statement
-        # a new user types. Spark SQL evaluates the VALUES rows directly;
-        # the frame then takes _insert_frame's full column-list /
-        # NULL-fill / cast-to-table-types treatment, same as a SELECT.
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        df = _insert_frame(
-            engine,
-            name,
-            "INSERT INTO",
-            m.group(2),
-            f"SELECT * FROM VALUES {m.group(3)}",
-        )
-        n = df.count()
-        engine.insert(name, df)
-        return _status(engine, "insert", name, n)
-
-    m = _INSERT_OVERWRITE.match(query)
-    if m:
-        name = _resolve(engine, m.group(1))
-        if name is None:
-            return None
-        df = _insert_frame(
-            engine, name, "INSERT OVERWRITE", m.group(2), m.group(3)
-        )
-        n = df.count()
-        # Atomic full replacement (engine.overwrite): versioned tables
-        # publish one 'rewrite' snapshot; plain tables stage via
-        # localCheckpoint so a self-referential SELECT reads the OLD
-        # state. Same column-list/NULL-fill/cast semantics as INSERT.
-        engine.overwrite(name, df)
-        return _status(engine, "insert_overwrite", name, n)
+    if _DML_VERB.match(query):
+        res = _execute_parsed_dml(engine, query)
+        if res is not None:
+            return res
 
     m = _CTAS.match(query)
     if m:
@@ -1192,259 +1333,6 @@ def try_execute_dml(engine, query: str) -> DataFrame | None:
         # engine process (review finding)
         engine.drop_table(name, delete_files=True)
         return _status(engine, "drop_table", name, 1)
-
-    m = _MERGE.match(query)
-    if m:
-        name = _resolve(engine, m.group("tgt"))
-        if name is None:
-            return None
-        src_sql, alias, on_sql, whens = (
-            m.group("src"),
-            m.group("alias"),
-            m.group("on"),
-            m.group("whens"),
-        )
-        evolve = bool(m.group("evolve"))
-        # the supported subset maps 1:1 onto engine.merge's semantics:
-        # ON must be a conjunction of bare column equalities (they become
-        # the merge keys), actions are DELETE / UPDATE SET * / INSERT *.
-        keys = []
-        for part in re.split(r"\s+AND\s+", on_sql, flags=re.I):
-            em = re.fullmatch(
-                r"\s*(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\s*=\s*"
-                r"(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\s*",
-                part,
-            )
-            if not em or em.group(1) != em.group(2):
-                raise ValueError(
-                    f"MERGE INTO {name}: ON supports only conjunctions of "
-                    f"same-name column equalities (got {part.strip()!r})"
-                )
-            keys.append(em.group(1))
-        # three ORDERED clause families, each first-match-wins (Delta)
-        matched_clauses = []
-        not_matched_clauses = []
-        by_source_clauses = []
-
-        def _fix_aliases(seg: str) -> str:
-            for user, internal in (
-                (alias, "n"),
-                (src_sql, "n"),
-                (m.group("tgt"), "o"),
-                (name, "o"),
-            ):
-                if user and re.fullmatch(r"[A-Za-z_][\w.]*", user):
-                    seg = re.sub(
-                        rf"\b{re.escape(user)}\.", internal + ".", seg
-                    )
-            return seg
-
-        def _rewrite_aliases(expr: str) -> str:
-            # merge_into evaluates conditions/assignments over the joined
-            # row with internal aliases o (target) / n (source): rewrite
-            # the user's own alias / table names so the statement's
-            # natural spelling (s.v < 0, tgt.v > 9) resolves.  Quoted
-            # spans pass through VERBATIM — a string literal 's.x' must
-            # land on the target unchanged (ADVICE r12); same quote
-            # semantics as _scan_top_level (both kinds, backslash
-            # escapes).
-            out, q, start, i, ln = [], None, 0, 0, len(expr)
-            while i < ln:
-                ch = expr[i]
-                if q:
-                    if ch == "\\":
-                        i += 2
-                        continue
-                    if ch == q:
-                        out.append(expr[start : i + 1])
-                        start, q = i + 1, None
-                elif ch in "'\"":
-                    out.append(_fix_aliases(expr[start:i]))
-                    start, q = i, ch
-                i += 1
-            tail = expr[start:]
-            out.append(tail if q else _fix_aliases(tail))
-            return "".join(out)
-
-        # STRICT sequential clause parse: every character of the WHEN
-        # text must be consumed, or an unsupported clause (INSERT (cols)
-        # VALUES ...) would be silently dropped and the merge would do
-        # less than the user wrote (review finding).
-        rest = whens.strip()
-        while rest:
-            cm = _WHEN.match(rest)
-            if not cm:
-                raise ValueError(
-                    f"MERGE INTO {name}: cannot parse WHEN clause at "
-                    f"{rest[:60]!r}; supported actions are DELETE, "
-                    "UPDATE SET * / UPDATE SET col = expr, INSERT *"
-                )
-            not_m, by_qual, cond, action = (
-                cm.group(1),
-                cm.group(2),
-                cm.group(3),
-                cm.group(4),
-            )
-            by_src = bool(by_qual) and "source" in by_qual.lower()
-            if by_qual and not not_m:
-                raise ValueError(
-                    f"MERGE: WHEN MATCHED takes no BY qualifier "
-                    f"(got{by_qual})"
-                )
-            act = re.sub(r"\s+", " ", action.upper())
-            cond_col = F.expr(_rewrite_aliases(cond)) if cond else None
-
-            def _parse_assignments(text: str) -> dict:
-                out = {}
-                for clause in _split_top_level(text):
-                    col, eq, expr = clause.partition("=")
-                    col = col.strip()
-                    if not eq or not re.fullmatch(r"[A-Za-z_]\w*", col):
-                        raise ValueError(
-                            f"MERGE INTO {name}: cannot parse SET clause "
-                            f"{clause!r}"
-                        )
-                    out[col] = F.expr(_rewrite_aliases(expr.strip()))
-                return out
-
-            if by_src:
-                # WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE |
-                # UPDATE SET c = e: target rows the source lacks; the
-                # condition/assignments see only o.<col>
-                if act == "DELETE":
-                    by_source_clauses.append(
-                        {"action": "delete", "condition": cond_col,
-                         "set": None}
-                    )
-                elif act.startswith("UPDATE SET") and act != "UPDATE SET *":
-                    assigns = re.sub(
-                        r"^UPDATE\s+SET\s+", "", action, flags=re.I
-                    ).strip()
-                    by_source_clauses.append(
-                        {
-                            "action": "update",
-                            "condition": cond_col,
-                            "set": _parse_assignments(assigns),
-                        }
-                    )
-                else:
-                    raise ValueError(
-                        "MERGE: WHEN NOT MATCHED BY SOURCE supports THEN "
-                        "DELETE or THEN UPDATE SET col = expr (no SET * — "
-                        "there is no source row)"
-                    )
-            elif not_m:
-                # WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT * |
-                # INSERT (cols) VALUES (exprs)
-                if act == "INSERT *":
-                    not_matched_clauses.append(
-                        {"condition": cond_col, "values": None}
-                    )
-                else:
-                    im = _MERGE_INSERT_VALUES.match(action)
-                    if not im:
-                        raise ValueError(
-                            "MERGE: WHEN NOT MATCHED supports THEN "
-                            "INSERT * or INSERT (cols) VALUES (exprs)"
-                        )
-                    cols = [
-                        c.strip() for c in _split_top_level(im.group(1))
-                    ]
-                    vals = _split_top_level(im.group(2))
-                    if len(cols) != len(vals) or not cols:
-                        raise ValueError(
-                            f"MERGE INTO {name}: INSERT column list "
-                            f"({len(cols)}) and VALUES list ({len(vals)}) "
-                            "differ in length"
-                        )
-                    bad = [
-                        c for c in cols
-                        if not re.fullmatch(r"[A-Za-z_]\w*", c)
-                    ]
-                    if bad:
-                        raise ValueError(
-                            f"MERGE INTO {name}: cannot parse INSERT "
-                            f"columns {bad}"
-                        )
-                    not_matched_clauses.append(
-                        {
-                            "condition": cond_col,
-                            "values": {
-                                c: F.expr(_rewrite_aliases(v.strip()))
-                                for c, v in zip(cols, vals)
-                            },
-                        }
-                    )
-            elif act == "DELETE":
-                matched_clauses.append(
-                    {"action": "delete", "condition": cond_col, "set": None}
-                )
-            elif act == "UPDATE SET *":
-                matched_clauses.append(
-                    {"action": "update", "condition": cond_col, "set": None}
-                )
-            else:  # UPDATE SET col = expr, ...
-                assigns = re.sub(
-                    r"^UPDATE\s+SET\s+", "", action, flags=re.I
-                ).strip()
-                matched_clauses.append(
-                    {
-                        "action": "update",
-                        "condition": cond_col,
-                        "set": _parse_assignments(assigns),
-                    }
-                )
-            rest = rest[cm.end() :].strip()
-        # Delta's multi-clause rule, applied PER FAMILY: clauses evaluate
-        # in order, first match wins, and every clause except the LAST
-        # must carry a condition — an unconditioned clause earlier in a
-        # family makes everything after it provably dead (the r12 parser
-        # silently kept only the last update clause; ADVICE r12).
-        for fam, lst in (
-            ("WHEN MATCHED", matched_clauses),
-            ("WHEN NOT MATCHED", not_matched_clauses),
-            ("WHEN NOT MATCHED BY SOURCE", by_source_clauses),
-        ):
-            for cl in lst[:-1]:
-                if cl["condition"] is None:
-                    raise ValueError(
-                        f"MERGE: when multiple {fam} clauses are given, "
-                        "only the last may omit its AND condition"
-                    )
-        if src_sql.startswith("("):
-            # exactly ONE paren pair — strip('()') would also eat a
-            # subquery's own trailing parens (… IN (1,2)) and emit
-            # unbalanced SQL (review finding)
-            src = engine.spark.sql(src_sql[1:-1])
-        else:
-            rsrc = _resolve(engine, src_sql)
-            # engine tables are registered under their VIEW key
-            # (schema__table) — resolve like every other reference here
-            src = engine.table(rsrc) if rsrc else engine.spark.table(src_sql)
-        # n_affected and the merge join must see the same rows: pin ONLY
-        # a non-deterministic source (same probe as the engine API,
-        # engine._pin_if_nondeterministic). An unconditional eager
-        # checkpoint here would materialize `MERGE INTO t USING (SELECT
-        # ... FROM 100TB_table)` into executor storage (VERDICT r13
-        # perf-weak); a deterministic plan re-evaluates identically for
-        # the count and the join.
-        src = engine._pin_if_nondeterministic(src)
-        n = src.count()
-        engine.merge(
-            name,
-            src,
-            keys,
-            matched_clauses=matched_clauses,
-            not_matched_clauses=not_matched_clauses,
-            by_source_clauses=by_source_clauses,
-            evolve_schema=evolve,
-            # SQL / Delta UPDATE SET * is last-write-wins: a NULL in the
-            # source DOES overwrite the target (the engine API's default
-            # coalesce merge is the reference's upsert semantics, not
-            # SQL's)
-            null_clobbers=True,
-        )
-        return _status(engine, "merge", name, n)
 
     m = _APPLY_CHANGES.match(query)
     if m:

@@ -42,7 +42,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from polars_lake_spark.exprs import referenced_columns
+from polars_lake_spark.exprs import quoted_spans, referenced_columns
 from polars_lake_spark.layout import (
     BUCKET_COL,
     DEFAULT_BUCKETS,
@@ -718,32 +718,8 @@ class Engine:
         if spec.zone_maps:
             # Fold the new files' footer stats into the dir's zone-map
             # sidecar BEFORE the commit publishes it (the dir is
-            # immutable afterwards). Footer-metadata only — never a data
-            # scan; distributed past 64 files. Best-effort: a stats
-            # failure must never fail the write (reads just fall back to
-            # unpruned dir scans for this dir).
-            try:
-                from polars_lake_spark.zonemaps import (
-                    collect_zonemap,
-                    write_zonemap,
-                )
-
-                write_zonemap(wpath, collect_zonemap(wpath, spark=self.spark))
-            except Exception as e:
-                # Degrade LOUDLY (VERDICT r9): a persistent footer/env
-                # failure would otherwise silently turn every future
-                # scan into full-file planning. Warn once per table;
-                # the running count is surfaced by table_info().
-                n_err = self.zonemap_errors.get(spec.name, 0) + 1
-                self.zonemap_errors[spec.name] = n_err
-                if n_err == 1:
-                    warnings.warn(
-                        f"zone-map collection failed for table "
-                        f"{spec.name!r}; scans of this write dir fall "
-                        f"back to unpruned planning: {e!r}",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
+            # immutable afterwards).
+            self._collect_zonemap(spec.name, wpath)
         snap = store.commit_write(
             wname,
             op,
@@ -755,6 +731,31 @@ class Engine:
         self._write_manifest(spec)
         self._maybe_auto_optimize(spec.name, snap)
         return snap
+
+    def _collect_zonemap(self, name: str, wpath: str) -> None:
+        """Write ``wpath``'s zone-map sidecar from its parquet footers.
+        Footer-metadata only — never a data scan; distributed past 64
+        files. Best-effort: a stats failure must never fail the write
+        (reads just fall back to unpruned scans of this dir), but it
+        degrades LOUDLY (VERDICT r9): a persistent footer/env failure
+        would otherwise silently turn every future scan into full-file
+        planning. Warns once per table; the running count is surfaced
+        by table_info()."""
+        from polars_lake_spark.zonemaps import collect_zonemap, write_zonemap
+
+        try:
+            write_zonemap(wpath, collect_zonemap(wpath, spark=self.spark))
+        except Exception as e:
+            n_err = self.zonemap_errors.get(name, 0) + 1
+            self.zonemap_errors[name] = n_err
+            if n_err == 1:
+                warnings.warn(
+                    f"zone-map collection failed for table {name!r}; "
+                    "scans of this write dir fall back to unpruned "
+                    f"planning: {e!r}",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
 
     def _resolve_bloom_cols(
         self, df: DataFrame, requested, format: str
@@ -1636,12 +1637,12 @@ class Engine:
 
         DML and maintenance statements over engine tables route through
         the real mutation paths (polars_lake_spark.dml) and return a
-        one-row (operation, table, n_affected) status frame: DELETE
-        FROM, UPDATE ... SET, INSERT INTO [(cols)] SELECT, MERGE INTO
-        ... USING ... WHEN [NOT] MATCHED ..., CREATE TABLE AS SELECT,
-        DROP TABLE [IF EXISTS] (durable — removes files), VACUUM t
-        [RETAIN n], OPTIMIZE t [ZORDER BY (cols)].  Everything else is
-        vanilla Spark SQL."""
+        one-row (operation, table, n_affected) status frame. DELETE,
+        UPDATE, MERGE INTO and INSERT are parsed by Spark's own parser;
+        CREATE TABLE AS SELECT, DROP TABLE [IF EXISTS] (durable —
+        removes files), VACUUM, OPTIMIZE and the other extension
+        statements keep the grammar in dml.py.  Everything else is
+        vanilla Spark SQL (after the SELECT fast paths)."""
         from polars_lake_spark import dml
 
         res = dml.try_execute_dml(self, query)
@@ -1723,22 +1724,15 @@ class Engine:
         """A copy of ``query`` with string-literal CONTENTS blanked
         (length preserved), so keyword regexes can neither bail on nor
         mis-slice text inside literals; match spans index the original
-        text.  Shared by every SQL fast-path matcher."""
-        masked, q, i = list(query), None, 0
-        while i < len(query):
-            ch = query[i]
-            if q:
-                if ch == "\\":
-                    masked[i] = masked[min(i + 1, len(query) - 1)] = " "
-                    i += 2
-                    continue
-                if ch == q:
-                    q = None
-                masked[i] = " "
-            elif ch in "'\"":
-                q, masked[i] = ch, " "
-            i += 1
-        return "".join(masked)
+        text.  Shared by every SQL fast-path matcher; the literals come
+        from the one quote scanner, ``exprs.quoted_spans``."""
+        out, last = [], 0
+        for a, b in quoted_spans(query):
+            # an unterminated literal's span ends one past the text
+            out += (query[last:a], " " * (min(b, len(query) - 1) + 1 - a))
+            last = b + 1
+        out.append(query[last:])
+        return "".join(out)
 
     def _try_zonemap_select(
         self, query: str, asof: dict[str, tuple[str, int]] | None = None
@@ -4347,25 +4341,7 @@ class Engine:
                     moved.append(e)
                 spec.versioned = True
                 if spec.zone_maps:
-                    try:
-                        from polars_lake_spark.zonemaps import (
-                            collect_zonemap,
-                            write_zonemap,
-                        )
-
-                        write_zonemap(
-                            wpath, collect_zonemap(wpath, spark=self.spark)
-                        )
-                    except Exception as e:
-                        self.zonemap_errors[name] = (
-                            self.zonemap_errors.get(name, 0) + 1
-                        )
-                        warnings.warn(
-                            f"zone-map collection failed while converting "
-                            f"{name!r}: {e!r}",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
+                    self._collect_zonemap(name, wpath)
                 spec.schema_json = schema_json
                 store.commit_write(wname, "create", schema_json)
                 self._write_manifest(spec)

@@ -35,26 +35,22 @@ _KEYWORDS = frozenset(
 )
 
 
+# one string literal: either quote kind, backslash escapes (a trailing
+# lone backslash included), the closing quote captured when present
+_LITERAL = re.compile(
+    r"""'(?:[^'\\]+|\\.|\\\Z)*(')?|"(?:[^"\\]+|\\.|\\\Z)*(")?""", re.S
+)
+
+
 def quoted_spans(s: str) -> list[tuple[int, int]]:
     """(start, end) index ranges (inclusive) of string literals in ``s``:
     both quote kinds, backslash escapes; an unterminated literal runs to
-    end-of-string."""
-    spans, q, start, i, n = [], None, 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if q:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == q:
-                spans.append((start, i))
-                q = None
-        elif ch in "'\"":
-            q, start = ch, i
-        i += 1
-    if q:
-        spans.append((start, n))
-    return spans
+    end-of-string (its end is ``len(s)``). The one quote scanner every
+    SQL text helper uses."""
+    return [
+        (m.start(), m.end() - 1 if m.group(1) or m.group(2) else len(s))
+        for m in _LITERAL.finditer(s)
+    ]
 
 
 def _in_spans(pos: int, spans: list[tuple[int, int]]) -> bool:

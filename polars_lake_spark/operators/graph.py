@@ -384,14 +384,9 @@ def pagerank(
     # checkpointed RDDs backing the chain live in the shared context, so
     # nothing is recomputed and the returned frame executes fine from
     # the caller.
-    iso = spark.newSession()
-    from polars_lake_spark.session import configure_session
+    from polars_lake_spark.session import isolated_session
 
-    configure_session(iso)
-    iso.conf.set(
-        "spark.sql.shuffle.partitions",
-        spark.conf.get("spark.sql.shuffle.partitions"),
-    )
+    iso = isolated_session(spark)
     iso.conf.set("spark.sql.adaptive.enabled", "false")
     import uuid
 

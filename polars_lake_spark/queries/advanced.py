@@ -79,7 +79,6 @@ def asof_join_events(spark, sf_dir):
     range explosion)."""
     from polars_lake_spark.operators.asof import asof_join
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load_table(spark, sf_dir, "events")
     clicks = (
         e.filter(F.col("event_type") == "click")
@@ -122,7 +121,6 @@ def range_join_events(spark, sf_dir):
     keyed shuffle instead of a per-user cross product."""
     from polars_lake_spark.operators.asof import range_join
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pid"), "user_id", F.col("ts").alias("pts")

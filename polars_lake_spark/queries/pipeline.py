@@ -19,6 +19,24 @@ from polars_lake_spark.operators import similarity as S
 from polars_lake_spark.queries import register
 from polars_lake_spark.sources import load_table
 
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+def _isolated_engine(spark, prefix: str):
+    """A scratch Engine on an isolated session (``session.
+    isolated_session``) under a fresh temp root, so a gate can flip
+    confs without touching the caller's session. Returns (session,
+    engine, root); the caller removes root."""
+    import tempfile
+
+    from polars_lake_spark import Engine
+    from polars_lake_spark.session import isolated_session
+
+    iso = isolated_session(spark)
+    root = tempfile.mkdtemp(prefix=prefix)
+    return iso, Engine(iso, root), root
+
+
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 _JACCARD_ORACLE = """
@@ -1435,22 +1453,17 @@ def bm25_index_probe_check(spark, sf_dir):
     list driver-side. add_batch is O(batch) (broadcast anti-join on
     known ids) and replay-safe."""
     import shutil
-    import tempfile
 
-    from polars_lake_spark import Engine
     from polars_lake_spark.operators.bm25_index import BM25Index
 
-    root = tempfile.mkdtemp(prefix="plsq_bmi_")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old_coalesce = spark.conf.get(coalesce_key, "true")
+    iso, eng, root = _isolated_engine(spark, "plsq_bmi_")
     try:
-        eng = Engine(spark, root)
-        docs = load_table(spark, sf_dir, "documents").localCheckpoint(
+        docs = load_table(iso, sf_dir, "documents").localCheckpoint(
             eager=True
         )
         # several files per write (AQE would coalesce the tiny test
         # corpus to one range partition, leaving nothing to skip)
-        spark.conf.set(coalesce_key, "false")
+        iso.conf.set(_COALESCE, "false")
         idx = BM25Index(eng, "d")
         idx.create(docs)
         shifted = docs.filter(F.col("doc_id") % 2 == 0).select(
@@ -1472,7 +1485,6 @@ def bm25_index_probe_check(spark, sf_dir):
         rows2, schema = out.collect(), out.schema
         return spark.createDataFrame(rows2, schema)
     finally:
-        spark.conf.set(coalesce_key, old_coalesce)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -1993,20 +2005,15 @@ def bm25_phrase_check(spark, sf_dir):
     postings) scan (zone-map pruned), position arithmetic + per-doc
     grouping only on that query-bounded set."""
     import shutil
-    import tempfile
 
-    from polars_lake_spark import Engine
     from polars_lake_spark.operators.bm25_index import BM25Index
 
-    root = tempfile.mkdtemp(prefix="plsq_bmp_")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old_coalesce = spark.conf.get(coalesce_key, "true")
+    iso, eng, root = _isolated_engine(spark, "plsq_bmp_")
     try:
-        eng = Engine(spark, root)
-        docs = load_table(spark, sf_dir, "documents").localCheckpoint(
+        docs = load_table(iso, sf_dir, "documents").localCheckpoint(
             eager=True
         )
-        spark.conf.set(coalesce_key, "false")
+        iso.conf.set(_COALESCE, "false")
         idx = BM25Index(eng, "d")
         idx.create(docs)
         top = idx.phrase_topk(["merge", "stream"], k=10)
@@ -2021,7 +2028,6 @@ def bm25_phrase_check(spark, sf_dir):
         rows2, schema = out.collect(), out.schema
         return spark.createDataFrame(rows2, schema)
     finally:
-        spark.conf.set(coalesce_key, old_coalesce)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -2070,20 +2076,15 @@ def bm25_phrase_slop_check(spark, sf_dir):
     O(phrase-term postings) after the same pruned probe exact phrases
     use."""
     import shutil
-    import tempfile
 
-    from polars_lake_spark import Engine
     from polars_lake_spark.operators.bm25_index import BM25Index
 
-    root = tempfile.mkdtemp(prefix="plsq_bms_")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old_coalesce = spark.conf.get(coalesce_key, "true")
+    iso, eng, root = _isolated_engine(spark, "plsq_bms_")
     try:
-        eng = Engine(spark, root)
-        docs = load_table(spark, sf_dir, "documents").localCheckpoint(
+        docs = load_table(iso, sf_dir, "documents").localCheckpoint(
             eager=True
         )
-        spark.conf.set(coalesce_key, "false")
+        iso.conf.set(_COALESCE, "false")
         idx = BM25Index(eng, "d")
         idx.create(docs)
         top = idx.phrase_topk(["merge", "stream"], k=10, slop=2)
@@ -2098,7 +2099,6 @@ def bm25_phrase_slop_check(spark, sf_dir):
         rows2, schema = out.collect(), out.schema
         return spark.createDataFrame(rows2, schema)
     finally:
-        spark.conf.set(coalesce_key, old_coalesce)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -2156,25 +2156,20 @@ def bm25_index_cdc_sync_check(spark, sf_dir):
     Without it a corpus delete silently inflates n_docs/df and
     mis-scores every probe."""
     import shutil
-    import tempfile
 
-    from polars_lake_spark import Engine
     from polars_lake_spark.operators.bm25_index import BM25Index
 
-    root = tempfile.mkdtemp(prefix="plsq_bmc_")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old_coalesce = spark.conf.get(coalesce_key, "true")
+    iso, eng, root = _isolated_engine(spark, "plsq_bmc_")
     try:
-        eng = Engine(spark, root)
         docs = (
-            load_table(spark, sf_dir, "documents")
+            load_table(iso, sf_dir, "documents")
             .select("doc_id", "text")
             .localCheckpoint(eager=True)
         )
         eng.create_table("corpus", docs, keys=["doc_id"], versioned=True)
         # several postings files per write (AQE would coalesce the tiny
         # test corpus to one range partition, leaving nothing to skip)
-        spark.conf.set(coalesce_key, "false")
+        iso.conf.set(_COALESCE, "false")
         idx = BM25Index(eng, "d")
         idx.create(eng.table("corpus"))
         v0 = eng.table_info("corpus")["version"]
@@ -2210,7 +2205,6 @@ def bm25_index_cdc_sync_check(spark, sf_dir):
         rows2, schema = out.collect(), out.schema
         return spark.createDataFrame(rows2, schema)
     finally:
-        spark.conf.set(coalesce_key, old_coalesce)
         shutil.rmtree(root, ignore_errors=True)
 
 

@@ -50,6 +50,19 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def isolated_session(spark: SparkSession) -> SparkSession:
+    """A session on ``spark``'s SparkContext with its own SQLConf, carrying
+    the engine's runtime confs and the caller's shuffle width. Conf
+    overrides made on it never reach a query planned concurrently on
+    ``spark`` (the serving facade shares one session across threads)."""
+    iso = configure_session(spark.newSession())
+    iso.conf.set(
+        "spark.sql.shuffle.partitions",
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+    return iso
+
+
 def get_spark(
     app_name: str = "polars-lake-spark",
     master: str | None = None,

@@ -129,8 +129,9 @@ def _coerce(tag, decoded, lit):
 def _file_stats(path: str, max_cols: int = MAX_ZONE_COLS) -> dict:
     """One parquet file's zone-map entry from its FOOTER: row count plus,
     per top-level primitive column, [min, max, null_count] folded over
-    row groups.  A column any row group lacks trustworthy min/max for is
-    dropped for the whole file (absent stats never prune).
+    row groups.  A column any row group lacks trustworthy (or decodable)
+    min/max for is dropped for the whole file (absent stats never
+    prune); the file's other columns keep theirs.
 
     Float/double stats are kept ONLY for parquet-mr-written files
     (``created_by``): parquet-mr propagates NaN into the recorded max
@@ -155,12 +156,18 @@ def _file_stats(path: str, max_cols: int = MAX_ZONE_COLS) -> dict:
             name = cm.path_in_schema
             if "." in name or name in bad:
                 continue  # nested leaf — not a top-level column
-            st = cm.statistics
-            if st is None or not st.has_min_max:
-                bad.add(name)
-                cols.pop(name, None)
-                continue
-            lo, hi = _encode(st.min), _encode(st.max)
+            try:
+                st = cm.statistics
+                lo, hi = (
+                    (_encode(st.min), _encode(st.max))
+                    if st is not None and st.has_min_max
+                    else (None, None)
+                )
+            except NotImplementedError:
+                # Arrow cannot decode this type's stats (e.g. a small
+                # DECIMAL stored as INT32): only this column goes
+                # unindexed, the rest of the file keeps its ranges
+                lo = hi = None
             if lo is None or hi is None:
                 bad.add(name)
                 cols.pop(name, None)
@@ -249,19 +256,27 @@ def load_zonemap(write_dir: str) -> dict | None:
 _OPS = ("<=", ">=", "!=", "<>", "=", "<", ">")
 _IDENT = r"`?([A-Za-z_]\w*)`?"
 _NUM = r"-?\d+(?:\.\d+)?(?:[eE]-?\d+)?"
+# a number as written or as Spark renders it (``.sql()``), whose typed
+# literals carry a suffix: 1.50BD, 10L, 2.5D
+_TYPED_NUM = re.compile(rf"({_NUM})(?:BD|[LSYD])?", re.I)
 
 
 def _literal(tok: str):
     """Parse one SQL literal token → (ok, value)."""
     tok = tok.strip()
-    m = re.fullmatch(r"'((?:[^']|'')*)'", tok, re.S)
+    # a backslash escape (Spark's string syntax, and how .sql() renders
+    # quotes, newlines and tabs) is not decoded here: such a literal
+    # prunes nothing rather than prune on the wrong value
+    m = re.fullmatch(r"'((?:[^'\\]|'')*)'", tok, re.S)
     if m:
         return True, m.group(1).replace("''", "'")
-    m = re.fullmatch(r'"((?:[^"]|"")*)"', tok, re.S)
+    m = re.fullmatch(r'"((?:[^"\\]|"")*)"', tok, re.S)
     if m:
         return True, m.group(1).replace('""', '"')
-    if re.fullmatch(_NUM, tok):
-        return True, float(tok) if re.search(r"[.eE]", tok) else int(tok)
+    m = _TYPED_NUM.fullmatch(tok)
+    if m:
+        num = m.group(1)
+        return True, float(num) if re.search(r"[.eE]", num) else int(num)
     low = tok.lower()
     if low == "true":
         return True, True
@@ -301,7 +316,13 @@ def _split_top_and(pred: str) -> list[str]:
             depth -= 1
         if depth == 0:
             m = re.match(r"\bBETWEEN\b", pred[i:], re.I)
-            if m and (i == 0 or not pred[i - 1].isalnum()):
+            # the keyword needs a left operand; at a conjunct's start it
+            # is the function form between(col, lo, hi)
+            if (
+                m
+                and (i == 0 or not pred[i - 1].isalnum())
+                and "".join(buf).strip()
+            ):
                 pending_between = True
             m = re.match(r"\bAND\b", pred[i:], re.I)
             if m and (i == 0 or not pred[i - 1].isalnum()):
@@ -371,6 +392,16 @@ def parse_conjuncts(pred: str) -> list[tuple]:
             continue
         m = re.fullmatch(
             rf"{_IDENT}\s+BETWEEN\s+(\S+)\s+AND\s+(\S+)", part, re.I
+        )
+        if m:
+            ok1, lo = _literal(m.group(2))
+            ok2, hi = _literal(m.group(3))
+            if ok1 and ok2:
+                out.append((m.group(1).lower(), "between", lo, hi))
+            continue
+        # ... and BETWEEN as Spark renders it: between(col, lo, hi)
+        m = re.fullmatch(
+            rf"between\(\s*{_IDENT}\s*,(.+?),(.+)\)", part, re.I | re.S
         )
         if m:
             ok1, lo = _literal(m.group(2))

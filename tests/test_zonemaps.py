@@ -51,6 +51,32 @@ def test_parse_conjuncts_or_disables_pruning():
     assert Z.parse_conjuncts("a = 'x OR y'") == [("a", "=", "x OR y")]
 
 
+def test_parse_conjuncts_reads_spark_rendering():
+    """DML predicates reach the deletion-vector paths as Spark renders
+    them (``.sql()``): parenthesized conjuncts, typed numeric suffixes
+    and the function form of BETWEEN all still prune."""
+    assert Z.parse_conjuncts("(a = 1) AND (b > 1.50BD) AND (c <= 10L)") == [
+        ("a", "=", 1),
+        ("b", ">", 1.5),
+        ("c", "<=", 10),
+    ]
+    assert Z.parse_conjuncts("between(x, 1, 3) AND (y IN ('a', 'b'))") == [
+        ("x", "between", 1, 3),
+        ("y", "in", ["a", "b"]),
+    ]
+    # the keyword form keeps its AND attached
+    assert Z.parse_conjuncts("x BETWEEN 1 AND 3 AND y > -2.5D") == [
+        ("x", "between", 1, 3),
+        ("y", ">", -2.5),
+    ]
+    # a backslash escape (how .sql() renders a quote or a newline) is
+    # not decoded, so that literal prunes nothing rather than the wrong
+    # value
+    assert Z.parse_conjuncts("(s = 'a\\nb') AND (t = 'it\\'s') AND (id = 3)") == [
+        ("id", "=", 3)
+    ]
+
+
 def test_file_survives_ranges():
     fs = {
         "rows": 10,
@@ -817,3 +843,30 @@ def test_engine_float_minmax_still_metadata_only(spark, eng):
     assert "FileScan" not in plan
     r = out.head()
     assert (r.lo, r.hi) == (0.0, 199 * 1.5)
+
+
+def test_zonemap_skips_only_the_column_without_arrow_stats(spark, eng):
+    """Spark stores a small DECIMAL as INT32, whose footer statistics
+    Arrow cannot decode (ArrowNotImplementedError). That column alone
+    goes unindexed: the write keeps its sidecar, raises no warning, and
+    the other columns still prune."""
+    import warnings as W
+
+    df = spark.range(0, 100).selectExpr(
+        "id", "CAST(id % 10 / 10 AS DECIMAL(2,1)) AS d"
+    ).coalesce(1)
+    path = os.path.join(eng.root, "raw")
+    df.write.parquet(path)
+    (f,) = glob.glob(os.path.join(path, "*.parquet"))
+    stats = Z._file_stats(f)
+    assert "d" not in stats["cols"]
+    assert stats["cols"]["id"][:2] == [["i", 0], ["i", 99]]
+    with W.catch_warnings():
+        W.simplefilter("error", RuntimeWarning)
+        eng.create_table("dz", df, keys=["id"], versioned=True)
+    assert eng.table_info("dz")["zonemap_errors"] == 0
+    eng.scan_where("dz", "id = 5").collect()
+    rep = eng.last_scan_report
+    assert rep["files_total"] == 1 and rep["files_kept"] == 1
+    eng.scan_where("dz", "id = 500").collect()
+    assert eng.last_scan_report["files_kept"] == 0
